@@ -1,41 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev measurement probes for the optimization rounds (r16) — the
-  * evidence generators behind OPTIMIZATION_r16.md:
+/** Dev measurement probes for the optimization rounds (r16/r17), run
+  * under the engine session (`Catalog.newSession`):
   *  - "read  <sfDir>": times repeated spark.read.parquet DataFrame
   *    construction with and without a supplied schema (the §1 schema
   *    cache's 77-vs-8 ms measurement).
   *  - "joins <sfDir>": counts join-node kinds in every batch query's
   *    pre-AQE physical plan under the engine session (extensions +
   *    full stats) — the SortMergeJoin census.
-  *  - "stages <sfDir> <query> [repeats]": per-stage wall/tasks/bytes
-  *    breakdown via a SparkListener, construction vs count timed
-  *    separately (the §4 single-task-stage evidence).
-  *  - "dump <sfDir> <tag> <q1,q2,...>": explain("formatted") per query
-  *    to plans/r16/<q>_<tag>.txt, stats-loaded engine session.
+  *  - "gcloop <sfDir> <query> [repeats]": per-run wall, GC and live
+  *    set, and the top stages by wall time with tasks and bytes.
+  *  - "floor <sfDir> <q1,q2,...> [repeats]": per-query construction,
+  *    analysis, optimization, planning and execution timed apart.
+  * For formatted plans use `graft.Explain`.
   */
 object OptProbe {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("read")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Engine posture matches the Bench/Verify session builders (r16's
-    // two AQE confs included) so probe traces measure the same plans
-    // the bench runs. SPARK_GRAFT_PROBE_MINPS overrides the coalescing
-    // floor for A/B'ing its effect (r17 q232 adjudication).
-    val minPS = sys.env.getOrElse("SPARK_GRAFT_PROBE_MINPS", "64k")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", minPS)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions()(_))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Catalog.newSession()
     mode match {
       case "read" =>
         // warm the listing caches once
@@ -79,42 +62,13 @@ object OptProbe {
             case e: Throwable => println(s"JOINS $n failed: ${e.getClass.getSimpleName}")
           }
         }
-      case "stages" =>
-        // stages <sfDir> <queryName> [repeats] — per-stage wall breakdown
-        val qn = args(2)
-        val repeats = if (args.length > 3) args(3).toInt else 2
-        graft.core.Catalog.statsMany(spark, sfDir,
-          graft.core.Catalog.tableNames, withHistograms = true)
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onStageCompleted(
-                sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-              val si = sc.stageInfo
-              val dur = si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)
-              val m = si.taskMetrics
-              println(f"STAGE ${si.stageId}%4d ${dur}%6d ms tasks=${si.numTasks}%3d " +
-                f"in=${m.inputMetrics.bytesRead / 1024 / 1024}%4d MB " +
-                f"sr=${m.shuffleReadMetrics.totalBytesRead / 1024 / 1024}%4d MB " +
-                f"sw=${m.shuffleWriteMetrics.bytesWritten / 1024 / 1024}%4d MB " +
-                s"${si.name.takeWhile(_ != '\n').take(70)}")
-            }
-          })
-        (1 to repeats).foreach { i =>
-          println(s"=== RUN $i construction ===")
-          val t0 = System.nanoTime()
-          val df = SparkEntry.queries(qn)(spark, sfDir)
-          val t1 = System.nanoTime()
-          println(f"=== RUN $i construction took ${(t1 - t0) / 1e9}%.2f s; count ===")
-          df.count()
-          println(f"=== RUN $i count took ${(System.nanoTime() - t1) / 1e9}%.2f s ===")
-        }
       case "gcloop" =>
         // gcloop <sfDir> <queryName> [repeats] — loop one query with a
         // GC/stage listener (r17: adjudicate q232's 32-core slow mode).
         // Per run: wall, driver-JVM GC delta (local mode: tasks run in
         // this JVM, so this IS task+driver GC), heap after run, summed
         // stage spill, and the top stages by duration with their
-        // task-metric GC share. minPartitionSize via SPARK_GRAFT_PROBE_MINPS.
+        // task-metric GC share.
         val qn = args(2)
         val repeats = if (args.length > 3) args(3).toInt else 10
         // SPARK_GRAFT_PROBE_BALLAST_MB: hold N MB of LIVE heap for the
@@ -214,26 +168,6 @@ object OptProbe {
               f"analyze=${ms(t1, t2)}%6.1f optimize=${ms(t2, t3)}%7.1f " +
               f"plan=${ms(t3, t4)}%6.1f exec=${ms(t4, t5)}%7.1f " +
               f"total=${ms(t0, t5)}%7.1f ms")
-          }
-        }
-      case "dump" =>
-        // dump <sfDir> <tag> <q1,q2,...> → plans/r17/<q>_<tag>.txt
-        val tag = args(2)
-        val names = args(3).split(",").toSeq
-        graft.core.Catalog.statsMany(spark, sfDir,
-          graft.core.Catalog.tableNames, withHistograms = true)
-        new java.io.File("plans/r17").mkdirs()
-        names.foreach { n =>
-          try {
-            val df = SparkEntry.queries(n)(spark, sfDir)
-            val txt = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(s"plans/r17/${n}_$tag.txt"),
-              txt.getBytes("UTF-8"))
-            println(s"DUMPED $n")
-          } catch {
-            case e: Throwable => println(s"DUMP $n failed: $e")
           }
         }
       case other => sys.error(s"unknown mode $other")

@@ -302,19 +302,40 @@ object Catalog {
     names.map(n => n -> statsCache.get((dir, n))._1).toMap
   }
 
-  /** Standard session factory: 32 shuffle partitions to match local[32]
-    * (not the 200 default sized for clusters), AQE on for runtime
-    * coalescing and skew-join handling.
+  /** The engine session: the one place the batch posture is set, used
+    * by Bench, Verify and every dev tool (streaming queries derive
+    * theirs from it through `Queries.streamSession`). `local[cpus]`
+    * with shuffle partitions equal to the core count (not the 200
+    * default sized for clusters); `cpus` defaults to SPARK_GRAFT_CPUS,
+    * else 4. AQE on for runtime coalescing and skew-join handling.
     */
-  def newSession(master: String = "local[32]"): SparkSession = {
+  def newSession(cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4))
+      : SparkSession = {
     val spark = SparkSession.builder()
-      .master(master)
+      .master(s"local[$cpus]")
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
-      // AQE on cached-plan consumers — see Bench.scala (r16)
+      // AQE may re-plan (coalesce) stages that READ a cached relation
+      // (default false for cache-partitioning stability, not
+      // correctness). The persist-based operators (sparseCosinePairs'
+      // tf relation, minhashPairs' signature cache) otherwise pin every
+      // cached-consumer stage at the full shuffle-partition count even
+      // when the cached relation is KB-sized — measured r16 at sf0.1:
+      // q147 cold 7.55 -> 4.31 s, warm 3.80 -> 2.80 s; q26/q98 colds
+      // 1.09/1.70 -> 0.79/1.44. Scale-adaptive by construction: AQE
+      // coalesces toward its advisory partition size, so large cached
+      // relations keep their parallelism. (OPTIMIZATION_r16.md §2)
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // 64k coalescing floor for CPU-dense sub-MB stages — see Bench.scala (r16)
+      // AQE partition coalescing is byte-proportional, so it collapses
+      // CPU-DENSE sub-MB stages (containment's array_intersect verify,
+      // rankedToks joins over exploded shingles) to ONE task at the
+      // default 1 MB minPartitionSize — measured r16: a 3.0-3.4 s
+      // single-task stage inside q231; q231 cold 4.97 -> 2.67 s, warm
+      // 5.09 -> 2.56 s with a 64k floor. Tail impact measured neutral
+      // (30-query sample, median per-query ratio 1.000). At cluster
+      // scale multi-GB stages are sized by totalBytes/parallelism, so a
+      // 64k floor only affects tiny stages. (OPTIMIZATION_r16.md §4)
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
